@@ -196,6 +196,43 @@ object Bench {
   private[graft] def keepsRetry(first: (Double, Double), retry: (Double, Double)): Boolean =
     retry._1 > 0 && retry._1 < first._1
 
+  /** One entry's measurement: the median of three timed runs and their
+    * min, the interference-free floor. One-shot stopwatch numbers on a
+    * 32-thread shared box produce 3-8x phantom outliers (scheduler/GC
+    * interference), hence three runs in the same warmed session. One
+    * UNTIMED warm run precedes them: the first execution of a heavy plan
+    * pays whole-stage-codegen compilation (measured ~5s on the 64-vote
+    * simhash aggregate), which is JIT cost, not plan cost. A run that throws records the exception class under `name` in
+    * `errors` and yields (-1, -1), so the failure fails the suite instead
+    * of silently dropping out of the total.
+    */
+  private[graft] def median3(name: String, errors: scala.collection.mutable.Map[String, String])(
+      body: => Any): (Double, Double) = {
+    def time(): Double = {
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }
+    try {
+      time()
+      val runs = Seq.fill(3)(time())
+      (runs.sorted.apply(1), runs.min)
+    } catch {
+      case e: Throwable =>
+        errors(name) = e.getClass.getName
+        (-1.0, -1.0)
+    }
+  }
+
+  /** The line's share of `errors`: the first failed entry with its
+    * exception's simple class name, and the count. The detail file lists
+    * them all; the line has room for one (BenchGovernanceSpec pins it).
+    */
+  private[graft] def errorsLineField(errors: Seq[(String, String)]): String =
+    errors.headOption.fold("") { case (n, c) =>
+      s""""errors":{"$n":"${c.split('.').last}"},"n_errors":${errors.size},"""
+    }
+
   /** Committed 20000x256 native-HDF5 bench fixture (tools/gen_h5ad.py). */
   private def h5adBenchFixture: String =
     Seq("fixtures/h5ad/bench.h5ad", "/root/repo/fixtures/h5ad/bench.h5ad")
@@ -316,28 +353,11 @@ object Bench {
       System.gc()
     }
 
-    def time(body: => Any): Double = {
-      val t0 = System.nanoTime()
-      try body catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // One-shot stopwatch numbers on a 32-thread shared box produce 3-8x
-    // phantom outliers (scheduler/GC interference); each entry runs 3x in
-    // the same warmed session and reports the median, with the min kept
-    // alongside as the interference-free floor. One UNTIMED warm run
-    // precedes the timed ones: the first execution of a heavy plan pays
-    // whole-stage-codegen compilation (measured ~5s on the 64-vote
-    // simhash aggregate — round-6 verdict), which is JIT cost, not plan
-    // cost, and was polluting run 1 of the median.
-    def median3(body: => Any): (Double, Double) = {
-      try {
-        if (time(body) < 0) return (-1.0, -1.0) // plan-warm (codegen compile)
-        val runs = Seq.fill(3)(time(body))
-        if (runs.exists(_ < 0)) (-1.0, -1.0)
-        else (runs.sorted.apply(1), runs.min)
-      } finally isolate()
-    }
+    // entry -> exception class of every failed measurement (first pass or
+    // retry), in suite order; any entry here fails the run
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def measured(name: String, body: => Any): (Double, Double) =
+      try median3(name, errors)(body) finally isolate()
 
     // toRdd.count() evaluates the query's full output schema per row but
     // never collects: a bare Dataset.count() lets Catalyst prune every
@@ -498,7 +518,7 @@ object Bench {
       }
     val bodyByName = allBodies.toMap
     val firstPass: Seq[(String, (Double, Double))] =
-      allBodies.map { case (n, body) => n -> median3(body()) }
+      allBodies.map { case (n, body) => n -> measured(n, body()) }
 
     // sf0.1 baseline rows from the BASELINE.md measured table. Governance
     // (retry guard, severity ranking, normalized totals) reads the
@@ -536,7 +556,7 @@ object Bench {
     val retryNames = contended.filterNot(_._1.startsWith("x"))
       .sortBy(-_._2).map(_._1).take(16)
     val retryTimes: Map[String, (Double, Double)] =
-      retryNames.map(n => n -> median3(bodyByName(n)())).toMap
+      retryNames.map(n => n -> measured(n, bodyByName(n)())).toMap
 
     val retriedLog = retryNames.flatMap { n =>
       retryTimes.get(n).map(r => n -> (firstPass.toMap.apply(n), r))
@@ -670,18 +690,25 @@ object Bench {
     // n_contended (like fam) is detail-only: every line byte competes
     // with the contract-protected queries map in the ~2 KB tail capture
     val driftField = driftBase + s""""n_contended":$nContendedWorkload,""" + normFieldsDetail
-    val driftFieldLine = driftBase + normFieldsLine
+    // a failed entry is missing from the total, so the normalized total
+    // means nothing; its bytes carry the errors instead
+    val driftFieldLine = driftBase + (if (errors.isEmpty) normFieldsLine else errorsLineField(errors.toSeq))
+    val errorsJson = errors.map { case (n, c) => "\"" + n + "\":\"" + c + "\"" }.mkString("{", ",", "}")
     // fam (per-family sums) lives in the detail file since r18: the six
     // restored `queries` entries outrank it for line bytes (the queries
     // map is contract-protected; fam never was)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath),
       s"""{"metric":"total","value":$total,"unit":"sec","n_entries":${all.size},""" +
-        s""""fam":$fams,""" + driftField +
+        s""""fam":$fams,"errors":$errorsJson,""" + driftField +
         s""""queries":$medians,"queries_min":$mins,"retried":$retriedJson,"sf":"$sfDir"}""" + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     println(formatLine(r3(total), all.size, qs, retriedLog.size, driftFieldLine,
       java.nio.file.Paths.get(detailPath).getFileName.toString, sfDir))
     spark.stop()
+    if (errors.nonEmpty) {
+      System.err.println(s"[bench] ${errors.size} entries failed: ${errors.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 
   /** 1k-record bulk registration with hash-dedup lookups: 500 unique

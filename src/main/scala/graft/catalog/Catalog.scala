@@ -1,11 +1,15 @@
 package graft.catalog
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.graft.LocalRows
 import graft.core.Base62
 
 /** Parquet-backed metadata catalog with copy-on-write snapshots.
@@ -21,9 +25,17 @@ import graft.core.Base62
   *    bulk saves at 10k rows, `models/save.py:31`) and are unioned into
   *    reads until flushed;
   *  - updates (trash/restore, `is_latest` flips) are whole-table
-  *    copy-on-write rewrites — registry tables are metadata (small relative
-  *    to the data plane), and rewrites are Spark jobs so they scale with
-  *    the cluster, not the driver.
+  *    copy-on-write rewrites;
+  *  - a table whose estimated size is within
+  *    `spark.sql.autoBroadcastJoinThreshold` (small enough that every
+  *    catalog join broadcasts it) is held on the driver: its committed
+  *    snapshot is kept once, as the compact rows a write collected or a
+  *    first read loaded (the version this instance committed or loaded,
+  *    like the manifest itself), and `table` serves it with the buffer
+  *    as one `LocalRelation`, so point lookups and rewrites of it run no
+  *    scan job. Larger tables (and every table when the threshold is -1)
+  *    stay parquet-backed scans, and their rewrites are Spark jobs that
+  *    scale with the cluster, not the driver.
   *
   * `seed` makes uid generation and the clock deterministic, which the
   * correctness harness needs; production use passes seed=None semantics via
@@ -37,10 +49,16 @@ final class Catalog(
 ) {
   import Catalog._
 
-  private val buffers = mutable.Map.empty[String, mutable.ArrayBuffer[Row]]
+  private val buffers = mutable.Map.empty[String, mutable.ArrayBuffer[InternalRow]]
+  private val encoders = mutable.Map.empty[String, Row => InternalRow]
   private val maxIds = mutable.Map.empty[String, Long]
-  private val snapshotCache = mutable.Map.empty[String, DataFrame]
   private val manifest = mutable.Map.empty[String, Int] // table -> version
+  /** Each table's snapshot at its manifest version, once read or written:
+    * Left = its rows held on the driver, Right = its parquet scan.
+    */
+  private val snapshots = mutable.Map.empty[String, Either[Seq[InternalRow], DataFrame]]
+  /** `table(name)` plans, dropped on the table's next insert or write. */
+  private val views = mutable.Map.empty[String, LogicalPlan]
 
   /** Branch visibility context (reference: `branch_id` on SQLRecord). */
   var currentBranchId: Long = MainBranchId
@@ -62,7 +80,10 @@ final class Catalog(
     */
   var currentUserId: Option[Long] = None
 
-  locally { loadManifest() }
+  locally {
+    loadManifest()
+    LocalRows.install(spark)
+  }
 
   def uid(n: Int): String = Base62.randomWith(n, rng)
   def newUidFor(t: TableDef): String =
@@ -73,37 +94,38 @@ final class Catalog(
 
   // ---------------------------------------------------------------- reads
 
-  private def snapshotDf(name: String): Option[DataFrame] =
+  private def snapshot(name: String): Option[Either[Seq[InternalRow], DataFrame]] =
     manifest.get(name).map { v =>
-      snapshotCache.getOrElseUpdate(s"$name/v$v",
-        spark.read.schema(tableDef(name).schema).parquet(s"$root/$name/v$v"))
-    }
-
-  private def bufferDf(name: String): Option[DataFrame] =
-    buffers.get(name).filter(_.nonEmpty).map { rows =>
-      spark.createDataFrame(rows.toList.asJava, tableDef(name).schema)
+      snapshots.getOrElseUpdate(name, {
+        val scan = spark.read.schema(tableDef(name).schema).parquet(s"$root/$name/v$v")
+        if (LocalRows.fitsDriver(scan)) Left(ArraySeq.unsafeWrapArray(LocalRows.collect(scan)))
+        else Right(scan)
+      })
     }
 
   /** Current view of a registry table (snapshot ∪ unflushed buffer). */
-  def table(name: String): DataFrame = {
-    val t = tableDef(name)
-    (snapshotDf(name), bufferDf(name)) match {
-      case (Some(s), Some(b)) => s.unionByName(b)
-      case (Some(s), None)    => s
-      case (None, Some(b))    => b
-      case (None, None)       => spark.createDataFrame(List.empty[Row].asJava, t.schema)
+  def table(name: String): DataFrame = LocalRows.frame(spark, views.getOrElseUpdate(name, {
+    val schema = tableDef(name).schema
+    val buffered = buffers.get(name).map(_.toSeq).getOrElse(Nil)
+    snapshot(name) match {
+      case Some(Left(rows)) => LocalRows.plan(schema, if (buffered.isEmpty) rows else rows ++ buffered)
+      case Some(Right(scan)) if buffered.nonEmpty =>
+        scan.unionByName(LocalRows.frame(spark, LocalRows.plan(schema, buffered))).queryExecution.analyzed
+      case Some(Right(scan)) => scan.queryExecution.analyzed
+      case None => LocalRows.plan(schema, buffered)
     }
-  }
+  }))
 
   // --------------------------------------------------------------- writes
 
   def nextId(name: String): Long = {
-    val cur = maxIds.getOrElseUpdate(name, {
-      snapshotDf(name) match {
-        case Some(df) => Option(df.agg(org.apache.spark.sql.functions.max("id")).head().get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        case None => 0L
-      }
+    val cur = maxIds.getOrElseUpdate(name, snapshot(name) match {
+      case Some(Left(rows)) =>
+        val i = tableDef(name).schema.fieldIndex("id")
+        rows.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).maxOption.getOrElse(0L)
+      case Some(Right(scan)) =>
+        Option(scan.agg(max("id")).head().get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
+      case None => 0L
     })
     maxIds(name) = cur + 1
     cur + 1
@@ -130,7 +152,9 @@ final class Catalog(
     val unknown = withDefaults.keySet -- t.fieldNames
     require(unknown.isEmpty, s"unknown fields $unknown for registry '$name'")
     val row = Row.fromSeq(t.schema.fields.map(f => withDefaults.get(f.name).orNull).toSeq)
-    buffers.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += row
+    buffers.getOrElseUpdate(name, mutable.ArrayBuffer.empty) +=
+      encoders.getOrElseUpdate(name, LocalRows.encoder(t.schema))(row)
+    views.remove(name)
     withDefaults
   }
 
@@ -141,35 +165,48 @@ final class Catalog(
     * bulk updates). The new content replaces snapshot AND buffer.
     */
   def overwrite(name: String, df: DataFrame): Unit = {
-    val t = tableDef(name)
-    val aligned = df.select(t.schema.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+    // cast: held rows are read back by the table's schema, so each
+    // column's type must be exactly the schema's (no-op casts fold away)
+    val aligned = df.select(tableDef(name).schema.fields.toIndexedSeq
+      .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
     writeSnapshot(name, aligned)
-    buffers.remove(name)
   }
 
   /** Persist buffered inserts of one table into a new snapshot version. */
   def flush(name: String): Unit =
-    if (buffers.get(name).exists(_.nonEmpty)) { writeSnapshot(name, table(name)); buffers.remove(name) }
+    if (buffers.get(name).exists(_.nonEmpty)) writeSnapshot(name, table(name))
 
   def flushAll(): Unit = Schemas.all.map(_.name).foreach(flush)
 
+  /** Commits `df` as the table's whole content, replacing snapshot AND buffer. */
   private def writeSnapshot(name: String, df: DataFrame): Unit = {
     val v = manifest.getOrElse(name, 0) + 1
     val path = s"$root/$name/v$v"
-    // most registry tables are metadata-scale: one file keeps every
-    // downstream catalog join broadcast-able. But a registry CAN be huge
-    // (the reference claims 1e9 runs) — past ~1 GiB estimated, keep the
-    // incoming partitioning instead of funnelling the rewrite through a
-    // single task. The gate reads logical-plan STATS, not
-    // `df.rdd.getNumPartitions`: the latter both forces physical planning
-    // per flush and mis-fires on buffered local relations, whose default
-    // parallelism made 500-row tables write 33 tiny files each.
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val out = if (est > (1L << 30)) df else df.coalesce(1)
-    out.write.mode("overwrite").parquet(path)
+    // Gates read logical-plan STATS, not `df.rdd.getNumPartitions`: the
+    // latter forces physical planning per flush and mis-fires on local
+    // relations, whose default parallelism made 500-row tables write 33
+    // tiny files each.
+    if (LocalRows.fitsDriver(df)) {
+      // metadata-scale (the common case): collect once, write one file
+      // from those rows and hold them, so the next read or rewrite of this
+      // table re-reads nothing
+      val rows = ArraySeq.unsafeWrapArray(LocalRows.collect(df))
+      LocalRows.frame(spark, LocalRows.plan(tableDef(name).schema, rows))
+        .coalesce(1).write.mode("overwrite").parquet(path)
+      snapshots(name) = Left(rows)
+    } else {
+      // a registry CAN be huge (the reference claims 1e9 runs): one file
+      // keeps catalog joins cheap, but past ~1 GiB estimated keep the
+      // incoming partitioning instead of funnelling the rewrite through a
+      // single task
+      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      (if (est > (1L << 30)) df else df.coalesce(1)).write.mode("overwrite").parquet(path)
+      snapshots.remove(name)
+    }
     manifest(name) = v
-    snapshotCache.remove(s"$name/v${v - 1}")
     saveManifest()
+    buffers.remove(name)
+    views.remove(name)
   }
 
   /** Snapshot retention: every write creates `<table>/v<N>`, so a
@@ -193,7 +230,6 @@ final class Catalog(
               val v = fn.drop(1).toInt
               if (v <= current - keepLast) {
                 deleteRecursively(p)
-                snapshotCache.remove(s"$name/v$v")
                 removed += 1
               }
             }

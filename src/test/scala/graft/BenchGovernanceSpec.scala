@@ -251,6 +251,39 @@ class BenchGovernanceSpec extends AnyFunSuite {
     assert(line.length < 1900, s"line would be ${line.length} bytes")
   }
 
+  test("a throwing entry lands in errors, on the line and out of the normalization") {
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    var runs = 0
+    val (med, floor) = Bench.median3("q01_ok", errors) { runs += 1 }
+    assert(runs === 4) // one warm run + three timed
+    assert(med >= 0 && floor >= 0 && floor <= med)
+    var tries = 0
+    val failed = Bench.median3("d06_boom", errors) {
+      tries += 1
+      if (tries == 3) throw new IllegalStateException("boom")
+    }
+    assert(failed === ((-1.0, -1.0)))
+    assert(Bench.median3("e01_npe", errors)(throw new NullPointerException) === ((-1.0, -1.0)))
+    assert(errors.toSeq === Seq("d06_boom" -> "java.lang.IllegalStateException",
+      "e01_npe" -> "java.lang.NullPointerException"))
+    assert(Bench.errorsLineField(errors.toSeq) ===
+      """"errors":{"d06_boom":"IllegalStateException"},"n_errors":2,""")
+    assert(Bench.errorsLineField(Nil) === "")
+  }
+
+  test("worst-case failing-run line stays under the driver's ~2 KB stdout-tail capture") {
+    // a failing run's line drops the normalization fields for the errors
+    // field: a 32-char entry name with a 40-char exception class
+    val qs = Bench.headlineEntries
+      .map(k => "\"" + k + "\":99.999").mkString("{", ",", "}")
+    val drift = """"calib_drift":9.999,"calib_drift_end":9.999,"contaminated":false,""" +
+      Bench.errorsLineField(Seq(("e" * 32) -> ("org.apache.spark." + "X" * 40)) ++
+        Seq.fill(998)("q" -> "java.lang.Error"))
+    val line = Bench.formatLine("9999.999", 9999, qs, 16, drift,
+      "BENCH_DETAIL_32.json", "/root/testdata/sf0.1")
+    assert(line.length < 1900, s"line would be ${line.length} bytes")
+  }
+
   test("keepsRetry: single retry-keep rule for median AND normalization position") {
     // faster valid retry replaces the first pass
     assert(Bench.keepsRetry((2.0, 1.8), (1.5, 1.4)))

@@ -1,10 +1,14 @@
 package graft.catalog
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.graft.Jobs
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.artifact.{ArtifactStore, Versions}
 import graft.core.Versioning
+import graft.eav.ArtifactFeatures
 import graft.lineage.Lineage
 import graft.query.QuerySet
 
@@ -266,5 +270,93 @@ class CatalogSpec extends AnyFunSuite {
     assert(cat.vacuum(keepLast = 1) === 2)
     assert(cat.table("ulabel").count() === 5)
     intercept[IllegalArgumentException](cat.vacuum(0))
+  }
+
+  private def addArtifacts(cat: Catalog, n: Int): IndexedSeq[Map[String, Any]] =
+    (1 to n).map(i => cat.insert("artifact",
+      Map("key" -> s"k$i", "suffix" -> ".txt", "hash" -> s"h$i", "size" -> i.toLong)))
+
+  test("driver-held registry: point lookups after flushAll run no Spark job") {
+    val cat = Catalog.deterministic(spark, TestSpark.tmpDir("held"))
+    val arts = addArtifacts(cat, 20)
+    cat.flushAll()
+    assert(cat.table("artifact").queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation]))
+    val qs = QuerySet(cat, "artifact")
+    var got: Seq[Any] = Nil
+    val jobs = Jobs.count(spark) {
+      got = Seq(
+        qs.get(arts(6)("uid")).getAs[String]("key"),
+        qs.filter("key__startswith" -> "k1").first().map(_.getAs[String]("hash")),
+        qs.orderBy("-id").first().map(_.getAs[String]("key")),
+        qs.search("k1", Seq("key")).collect().map(_.getAs[String]("key")).toSeq.take(2),
+        qs.filter("hash" -> "h9").exists(),
+        qs.filter("hash" -> "nope").exists(),
+        cat.table("artifact").filter(col("key") === "k12").head(1).map(_.getAs[Long]("id")).toSeq)
+    }
+    assert(jobs === 0)
+    assert(got === Seq("k7", Some("h1"), Some("k20"), Seq("k1", "k10"), true, false,
+      Seq(arts(11)("id"))))
+  }
+
+  test("ArtifactFeatures.addValues with three scalar features runs no Spark job") {
+    val cat = Catalog.deterministic(spark, TestSpark.tmpDir("annotate"))
+    val aid = addArtifacts(cat, 1).head("id").asInstanceOf[Long]
+    Seq("score" -> "num", "batch" -> "int", "assay" -> "str").foreach { case (n, d) =>
+      cat.insert("feature", Map("name" -> n, "dtype" -> d))
+    }
+    cat.flushAll()
+    val features = new ArtifactFeatures(cat)
+    val values = Map[String, Any]("score" -> 0.5, "batch" -> 3L, "assay" -> "rna")
+    assert(Jobs.count(spark)(features.addValues(aid, values)) === 0)
+    assert(Jobs.count(spark)(features.addValues(aid, values)) === 0) // already linked: no-op
+    assert(cat.table("artifact_json_values").filter(col("artifact_id") === aid).count() === 3)
+    assert(cat.table("json_value").select("value_json").collect().map(_.getString(0)).toSet ===
+      Set("0.5", "3", "\"rna\""))
+  }
+
+  test("Lifecycle.restore of a driver-held registry runs one job, the snapshot write") {
+    val cat = Catalog.deterministic(spark, TestSpark.tmpDir("restore"))
+    val ids = addArtifacts(cat, 6).map(_("id").asInstanceOf[Long])
+    cat.flushAll()
+    Lifecycle.trash(cat, "artifact", ids.take(2))
+    assert(QuerySet(cat, "artifact").count() === 4)
+    assert(Jobs.count(spark)(Lifecycle.restore(cat, "artifact", ids.take(2))) <= 1)
+    assert(QuerySet(cat, "artifact").count() === 6)
+  }
+
+  /** insert -> flush -> trash -> restore -> vacuum on one root: the rows
+    * the writer serves, and the rows a catalog reopened on the root reads.
+    */
+  private def lifecycle(root: String): (Seq[Row], Seq[Row]) = {
+    val cat = Catalog.deterministic(spark, root)
+    val ids = addArtifacts(cat, 12).map(_("id").asInstanceOf[Long])
+    cat.flushAll()
+    Lifecycle.trash(cat, "artifact", ids.take(5))
+    Lifecycle.restore(cat, "artifact", ids.slice(1, 3))
+    cat.insert("artifact", Map("key" -> "late", "suffix" -> ".txt", "hash" -> "h13", "size" -> 13L))
+    cat.flush("artifact")
+    assert(cat.vacuum(keepLast = 1) === 3)
+    (cat.table("artifact").collect().toSeq,
+      Catalog.deterministic(spark, root).table("artifact").collect().toSeq)
+  }
+
+  test("above spark.sql.autoBroadcastJoinThreshold a registry stays parquet-backed, same rows") {
+    val (held, heldReopened) = lifecycle(TestSpark.tmpDir("held"))
+    assert(held.size === 13)
+    assert(held.count(_.getAs[Long]("branch_id") == Catalog.TrashBranchId) === 3)
+    assert(heldReopened === held)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val root = TestSpark.tmpDir("large")
+      val (large, largeReopened) = lifecycle(root)
+      assert(large === held)
+      assert(largeReopened === held)
+      val leaves = Catalog.deterministic(spark, root).table("artifact").queryExecution.analyzed
+        .collectLeaves()
+      assert(leaves.nonEmpty && !leaves.exists(_.isInstanceOf[LocalRelation]))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
