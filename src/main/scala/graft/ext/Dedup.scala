@@ -11,7 +11,10 @@ import org.apache.spark.sql.functions._
   *  - exact dedup is a hash window/groupBy (one shuffle on the content hash);
   *  - MinHash+LSH shuffles once on (band, bandHash) buckets so candidate
   *    generation is linear in corpus size, never O(n²);
-  *  - verification (true Jaccard) touches only bucket-local candidate pairs.
+  *  - verification (true Jaccard) touches only bucket-local candidate pairs;
+  *  - SimHash is one kernel over 1 or 2 signature words (64-bit xxhash64 or
+  *    60-bit DuckDB-replayable md5): per-bit votes in one aggregate, bands
+  *    sized from the corpus, hamming over the words ([[SimhashLayout]]).
   */
 object Dedup {
 
@@ -213,14 +216,65 @@ object Dedup {
   def minhashSignature(shingleCol: Column, k: Int = 16, seed: Long = 7L): Column =
     minhashSigFromMods(transform(shingleCol, h => pmod(h, lit(MinhashP))), k, seed)
 
-  /** LSH banding: a k-row signature split into `bands` buckets of k/bands
-    * rows; docs sharing any band bucket become candidate pairs. Statically
-    * unrolled so every slice/hash stays a codegen-able literal expression.
+  /** The persisted MinHash signature frame (id, sh, sig): numeric
+    * xxhash64 shingles (fast), or string shingles hashed by a 60-bit md5
+    * prefix (portable: every step replays in DuckDB, ~2x the hash cost).
+    * It feeds the banding and both verify sides, so hashing runs once; the
+    * calling pipeline owns the cache and releases it via [[finishPairs]].
     */
-  private def sigBands(sig: Column, k: Int, bands: Int): Column = {
+  private def minhashFrame(df: DataFrame, idCol: String, textCol: String, k: Int,
+                           shingleN: Int, seed: Long, portable: Boolean): DataFrame = {
+    val (tokens, shingles, hash) =
+      if (portable) (split(trim(col(textCol)), "\\s+"), shinglesFromTokens _,
+        (x: Column) => conv(substring(md5(x), 1, 15), 16, 10).cast("long"))
+      else (tokenHashes(col(textCol)), shingleHashesFromTokenHashes _, (h: Column) => h)
+    graft.core.Par.spreadForCpu(df)
+      .select(col(idCol).as("id"), tokens.as("tk"))
+      .select(col("id"), shingles(col("tk"), shingleN).as("sh"))
+      .select(col("id"), col("sh"), transform(col("sh"), x => pmod(hash(x), lit(MinhashP))).as("hmod"))
+      .select(col("id"), col("sh"), minhashSigFromMods(col("hmod"), k, seed).as("sig"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** LSH banding as (id, band, key) rows: `bands` slices of k/bands
+    * signature rows, statically unrolled (codegen-able literals). The key
+    * is the slice's string as DuckDB writes it (portable) or its xxhash64.
+    */
+  private def minhashBands(withSig: DataFrame, k: Int, bands: Int, portable: Boolean): DataFrame = {
     val rows = k / bands
-    array((0 until bands).map(b =>
-      xxhash64(concat_ws(",", slice(sig, b * rows + 1, rows)))): _*)
+    withSig.select(col("id"), posexplode(array((0 until bands).map { b =>
+      val key = concat_ws(",", slice(col("sig"), b * rows + 1, rows))
+      if (portable) key else xxhash64(key)
+    }: _*)).as(Seq("band", "key")))
+  }
+
+  /** The (id_a, id_b) edges whose true Jaccard over the shingle sets of
+    * `withSig` is at least `threshold`, with that Jaccard as `jaccard`.
+    */
+  private def jaccardVerified(edges: DataFrame, withSig: DataFrame, threshold: Double): DataFrame = {
+    val sa = withSig.select(col("id").as("id_a"), col("sh").as("sh_a"))
+    val sb = withSig.select(col("id").as("id_b"), col("sh").as("sh_b"))
+    edges.join(sa, "id_a").join(sb, "id_b")
+      .withColumn("jaccard",
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** The pair pipeline behind [[minhashPairs]] and [[minhashPairsPortable]]. */
+  private def minhashPairsOn(df: DataFrame, idCol: String, textCol: String, k: Int, bands: Int,
+                             threshold: Double, shingleN: Int, seed: Long,
+                             portable: Boolean): DataFrame = {
+    val withSig = minhashFrame(df, idCol, textCol, k, shingleN, seed, portable)
+    val banded = minhashBands(withSig, k, bands, portable)
+    // candidate pairs: same (band, key) bucket; dedup across bands
+    val a = banded.select(col("band"), col("key"), col("id").as("id_a"))
+    val b = banded.select(col("band"), col("key"), col("id").as("id_b"))
+    val candidates = a.join(b, Seq("band", "key"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+    finishPairs(jaccardVerified(candidates, withSig, threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard")), withSig)
   }
 
   /** Full MinHash-LSH near-duplicate pipeline:
@@ -229,40 +283,8 @@ object Dedup {
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 16, bands: Int = 4, threshold: Double = 0.4,
-                   shingleN: Int = 3): DataFrame = {
-    // signatures feed three downstream plans (banding + both pair sides);
-    // persist so shingling/hashing runs once — at scale this is the
-    // "materialize the signature table" stage of an LSH pipeline. The
-    // cache is OWNED here: the verified pair set (orders of magnitude
-    // smaller than the corpus-sized signature frame) is materialized
-    // eagerly via finishPairs and the signature cache released before
-    // returning, so repeated pipeline calls in one session never
-    // accumulate corpus-sized cached frames.
-    val withSig = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), tokenHashes(col(textCol)).as("th"))
-      .select(col("id"), shingleHashesFromTokenHashes(col("th"), shingleN).as("sh"))
-      .select(col("id"), col("sh"), minhashSignature(col("sh"), k).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = withSig.select(col("id"),
-      posexplode(sigBands(col("sig"), k, bands)).as(Seq("band", "band_hash")))
-    // candidate pairs: same (band, band_hash) bucket; dedup across bands
-    val a = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("band_hash"), col("id").as("id_b"))
-    val candidates = a.join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    // verify with true Jaccard over the shingle sets
-    val sa = withSig.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val sb = withSig.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    finishPairs(
-      candidates.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("jaccard",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard")),
-      withSig)
-  }
+                   shingleN: Int = 3): DataFrame =
+    minhashPairsOn(df, idCol, textCol, k, bands, threshold, shingleN, seed = 7L, portable = false)
 
   /** MinHash-LSH candidate edges in STAR form — the skew-safe path for
     * duplicate-cluster RESOLUTION. `minhashPairs` emits every bucket-local
@@ -283,77 +305,30 @@ object Dedup {
   def minhashClusterEdges(df: DataFrame, idCol: String, textCol: String,
                           k: Int = 16, bands: Int = 4, shingleN: Int = 3,
                           verifyThreshold: Option[Double] = None): DataFrame = {
-    val withSig = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), tokenHashes(col(textCol)).as("th"))
-      .select(col("id"), shingleHashesFromTokenHashes(col("th"), shingleN).as("sh"))
-      .select(col("id"), col("sh"), minhashSignature(col("sh"), k).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = withSig.select(col("id"),
-      posexplode(sigBands(col("sig"), k, bands)).as(Seq("band", "band_hash")))
+    val withSig = minhashFrame(df, idCol, textCol, k, shingleN, seed = 7L, portable = false)
+    val banded = minhashBands(withSig, k, bands, portable = false)
     // bucket representative via hash aggregation (map-side combinable min,
     // so even the hot bucket reduces before the shuffle), then one join to
     // attach members — never a bucket self-join
-    val reps = banded.groupBy("band", "band_hash").agg(min(col("id")).as("id_a"))
-    val edges = banded.join(reps, Seq("band", "band_hash"))
+    val reps = banded.groupBy("band", "key").agg(min(col("id")).as("id_a"))
+    val edges = banded.join(reps, Seq("band", "key"))
       .filter(col("id") =!= col("id_a"))
       .select(col("id_a"), col("id").as("id_b")).distinct()
-    val out = verifyThreshold match {
-      case None => edges
-      case Some(t) =>
-        val sa = withSig.select(col("id").as("id_a"), col("sh").as("sh_a"))
-        val sb = withSig.select(col("id").as("id_b"), col("sh").as("sh_b"))
-        edges.join(sa, "id_a").join(sb, "id_b")
-          .withColumn("jaccard",
-            size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-              size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-          .filter(col("jaccard") >= t)
-          .select("id_a", "id_b")
-    }
-    finishPairs(out, withSig)
+    finishPairs(
+      verifyThreshold.fold(edges)(t => jaccardVerified(edges, withSig, t).select("id_a", "id_b")),
+      withSig)
   }
 
-  /** Portable MinHash-LSH variant: identical pipeline to `minhashPairs`
-    * but shingle hashes come from md5 (15 hex chars = 60 bits) instead of
-    * xxhash64, and shingles stay strings — every step is reproducible in
-    * engines without xxhash64, so the WHOLE pipeline (hashing,
-    * permutations, banding, candidate join, Jaccard verify) is
-    * oracle-checkable in DuckDB from the same `minhashCoeffs` constants.
-    * ~2x the hash cost of the xxhash64 path; use that one when no
-    * cross-engine parity is needed.
+  /** Portable MinHash-LSH: the `minhashPairs` pipeline over md5-hashed
+    * string shingles, so the WHOLE pipeline (hashing, permutations,
+    * banding, candidate join, Jaccard verify) is oracle-checkable in
+    * DuckDB ([[minhashPortableOracleSql]]). ~2x the hash cost of the
+    * xxhash64 path; use that one when no cross-engine parity is needed.
     */
   def minhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            k: Int = 16, bands: Int = 4, threshold: Double = 0.4,
-                           shingleN: Int = 3, seed: Long = 7L): DataFrame = {
-    val withSig = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), split(trim(col(textCol)), "\\s+").as("tk"))
-      .select(col("id"), shinglesFromTokens(col("tk"), shingleN).as("sh"))
-      .select(col("id"), col("sh"),
-        transform(col("sh"),
-          x => pmod(conv(substring(md5(x), 1, 15), 16, 10).cast("long"), lit(MinhashP)))
-          .as("hmod"))
-      .select(col("id"), col("sh"), minhashSigFromMods(col("hmod"), k, seed).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rows = k / bands
-    val banded = withSig.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        concat_ws(",", slice(col("sig"), b * rows + 1, rows))): _*))
-        .as(Seq("band", "key")))
-    val a = banded.select(col("band"), col("key"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("key"), col("id").as("id_b"))
-    val candidates = a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val sa = withSig.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val sb = withSig.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    finishPairs(
-      candidates.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("jaccard",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard")),
-      withSig)
-  }
+                           shingleN: Int = 3, seed: Long = 7L): DataFrame =
+    minhashPairsOn(df, idCol, textCol, k, bands, threshold, shingleN, seed, portable = true)
 
   /** The DuckDB replica of `minhashPairsPortable` over a corpus CTE named
     * `corpus(doc_id, text)` — generated from the SAME `minhashCoeffs`, so
@@ -397,411 +372,230 @@ object Dedup {
        |WHERE j >= $threshold ORDER BY id_a, id_b""".stripMargin
   }
 
-  /** 64-bit SimHash over word tokens: per bit, sum +1/-1 weighted by token
-    * hash bit, take the sign.
+  // ----- SimHash: one W-word kernel ---------------------------------------
+
+  /** A simhash signature layout: W = `words` Long words of `wordBits` bits,
+    * either xxhash64 token hashes (64, fast) or 15-hex-char md5 slices (60,
+    * replayed by DuckDB). Each public entry point is one layout:
     *
-    * Shaped as explode → hash-aggregate (64 narrow sums) → reassemble:
-    * one shuffle on the doc id, fully vectorized. The naive per-row
-    * expression form (64 nested `aggregate` folds) blows past the
-    * whole-stage-codegen method-size limit and falls back to interpreted
-    * eval — measured ~20× slower.
+    * | entry point                    | W×wordBits | width ladder | plans as n grows       | guaranteed hamming |
+    * |--------------------------------|------------|--------------|------------------------|--------------------|
+    * | `simhashCandidates`            | 1×64       | 16..32       | 4×16, 3×17-21, 2×22-32 | ≤ 3, 2, 1          |
+    * | `simhashCandidatesPortable`    | 1×60       | 15..30       | 4×15, 3×16-20, 2×21-30 | ≤ 3, 2, 1          |
+    * | `simhash128Candidates`         | 2×64       | 16, 32, 64   | 8×16, 4×32, 2×64       | ≤ 7, 3, 1          |
+    * | `simhash128CandidatesPortable` | 2×60       | 15, 30, 60   | 8×15, 4×30, 2×60       | ≤ 7, 3, 1          |
+    *
+    * RECALL CONTRACT: the adaptive plan ([[planBands]]) takes the smallest
+    * ladder width bw with 2^bw >= 16·n and W·wordBits / bw bands. By
+    * pigeonhole a pair is GUARANTEED to surface only at hamming ≤ bands−1,
+    * so the guarantee narrows at each ladder step (n past 2^bw/16 docs).
+    * The widest plans saturate at 2^32/16 ≈ 268M docs (1×64), 2^30/16 ≈ 67M
+    * (1×60), ~10^18 (2×64) and ~7·10^16 (2×60). This is the Manku et al.
+    * (WWW'07) block-permutation trade: fewer, wider bands reach further but
+    * guarantee less. Beyond the bound recall is probabilistic, so the SAME
+    * pair can disappear as the corpus grows, and a `hamming <= 6` filter
+    * samples rather than enumerates. `bandPlan` pins a layout (fixed
+    * recall, quadratic background risk), `maxBucketDf` caps bucket
+    * membership, and the chosen plan is logged per run (slf4j INFO).
     */
-  def simhashDf(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // NO spreadForCpu here (r18 verdict regression d06 0.39×): xxhash64
-    // per token is the CHEAP hash — split-only map work in front of a
-    // plain aggregate, where the added exchange was measured pure cost
-    // (same empirical rule as tfidf/bigram/b05; the md5-based portable
-    // twin below is where spreading pays).
-    val tokenHashes = df
-      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val votes = (0 until 64).map { bit =>
-      sum(when(shiftright(col("h"), bit).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v$bit")
-    }
-    tokenHashes.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(bit =>
-          when(col(s"v$bit") > 0, lit(1L << bit)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("simhash"))
+  private[graft] final case class SimhashLayout(words: Int, wordBits: Int) {
+    require(wordBits == 64 || wordBits == 60, s"unsupported word width $wordBits")
+    val portable: Boolean = wordBits == 60
+    val totalBits: Int = words * wordBits
+    /** One word: every width from a quarter to half the word (3×17 leaves
+      * 13 of 64 bits unbanded). Two words: divisors, so no band straddles. */
+    val ladder: Seq[Int] =
+      if (words == 1) wordBits / 4 to wordBits / 2 else Seq(wordBits / 4, wordBits / 2, wordBits)
+    /** Word w is md5 hex chars 1–15, then 17–31: disjoint digest halves. */
+    def md5Start(w: Int): Int = 1 + 16 * w
   }
 
-  /** Cardinality-adaptive simhash band plan: (bands, bandWidth).
-    *
-    * Sizing rule (exact integer arithmetic so the generated DuckDB oracle
-    * reproduces it bit-for-bit): the band key space must hold the corpus
-    * with slack — pick the SMALLEST width `bw` in [minWidth, maxWidth]
-    * with `2^bw >= loadFactor * nDocs` (else maxWidth), then tile the
-    * signature with `bands = totalBits / bw` non-overlapping bands.
-    *
-    * Why: with fixed-width bands the expected background collisions per
-    * band grow as n² / 2^bw — the round-8 sf1.0 tier measured 17.8×
-    * candidate growth for 10× data at the legacy fixed 4×15-bit layout
-    * (SCALING.md). Scaling bw with log2(n) keeps the per-bucket load
-    * ≤ 1/loadFactor, so background candidates stay ~linear in n. The
-    * trade (standard for simhash at scale, cf. Manku et al. WWW'07
-    * block-permutation sizing): fewer, wider bands guarantee recall only
-    * for hamming ≤ bands-1; beyond that recall is probabilistic. At
-    * 100 TB you want that trade — the alternative is a candidate set
-    * that grows quadratically with the corpus.
+  /** The adaptive plan (bands, bandWidth): the smallest ladder width with
+    * `2^bw >= loadFactor * nDocs` (else the widest), tiled as
+    * `totalBits / bw` bands. Integer-exact, so the DuckDB oracle replays it;
+    * widths above 62 are only ever the last resort (`1L << 64` is 1).
     */
-  def simhashBandPlan(nDocs: Long, totalBits: Int, minWidth: Int, maxWidth: Int,
-                      loadFactor: Long = 16L): (Int, Int) = {
-    val bw = (minWidth to maxWidth).find(b => (1L << b) >= loadFactor * nDocs)
-      .getOrElse(maxWidth)
+  private def planBands(nDocs: Long, totalBits: Int, ladder: Seq[Int],
+                        loadFactor: Long): (Int, Int) = {
+    val bw = ladder.find(w => w <= 62 && (1L << w) >= loadFactor * nDocs).getOrElse(ladder.last)
     (totalBits / bw, bw)
   }
 
-  /** Band a signature frame on an adaptive plan and (optionally) drop
-    * buckets hotter than `maxBucketDf` — the same frequent-key cutoff as
-    * `substringSpans`' `maxGramDf`: a bucket with more members than the
-    * cap is background saturation (or a duplicate mega-cluster better
-    * served by exact dedup) and would contribute O(df²) candidate pairs.
-    * The df window shares the band/key shuffle key with the self-join
-    * that follows, so the guard adds no extra exchange.
+  /** [[planBands]] over every width in [minWidth, maxWidth]. Adaptive
+    * because with fixed-width bands background collisions per band grow as
+    * n² / 2^bw (17.8× candidates for 10× data at the legacy 4×15 layout,
+    * SCALING.md); scaling bw with log2(n) keeps them ~linear in n.
     */
-  private def bandPairs(withSim: DataFrame, bands: Int, bw: Int,
-                        maxBucketDf: Option[Int]): DataFrame = {
-    val mask = (1L << bw) - 1
-    val banded0 = withSim.select(col("id"), col("simhash"),
+  def simhashBandPlan(nDocs: Long, totalBits: Int, minWidth: Int, maxWidth: Int,
+                      loadFactor: Long = 16L): (Int, Int) =
+    planBands(nDocs, totalBits, minWidth to maxWidth, loadFactor)
+
+  /** [[planBands]] of a two-word layout (wordBits 64 fast, 60 portable). */
+  def simhash128BandPlan(nDocs: Long, wordBits: Int = 64,
+                         loadFactor: Long = 16L): (Int, Int) =
+    planBands(nDocs, 2 * wordBits, SimhashLayout(2, wordBits).ladder, loadFactor)
+
+  /** The signature frame (id, sim0 .. sim{W-1}): explode → W·wordBits ±1
+    * vote sums in ONE hash aggregate → one Long per word. The per-row fold
+    * form (one `aggregate` per bit) breaks codegen: measured ~20× slower.
+    */
+  private[graft] def simhashSignature(df: DataFrame, idCol: String, textCol: String,
+                                      s: SimhashLayout): DataFrame = {
+    // spread only the md5 paths: in front of the cheap xxhash64 the added
+    // exchange was pure cost (r18 verdict regressions d06 0.39×, d34 0.62×)
+    val tokens = (if (s.portable) graft.core.Par.spreadForCpu(df) else df)
+      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+    val wordHash: Int => Column =
+      if (s.portable) w => conv(substring(col("m"), s.md5Start(w), 15), 16, 10).cast("long")
+      // salt FIRST (r18 ADVICE): xxhash64(tok, 1L) folds to hash(1L, seed=h0),
+      // a pure function of word 0; xxhash64(1L, tok) re-hashes the token bytes
+      else w => if (w == 0) xxhash64(col("tok")) else xxhash64(lit(w.toLong), col("tok"))
+    val hashed = (if (s.portable) tokens.withColumn("m", md5(col("tok"))) else tokens)
+      .select(col("id") +: (0 until s.words).map(w => wordHash(w).as(s"h$w")): _*)
+    val votes = (0 until s.totalBits).map { bit =>
+      sum(when(shiftright(col(s"h${bit / s.wordBits}"), bit % s.wordBits).bitwiseAND(1) === 1, 1L)
+        .otherwise(-1L)).as(s"v$bit")
+    }
+    hashed.groupBy("id").agg(votes.head, votes.tail: _*)
+      .select(col("id") +: (0 until s.words).map { w =>
+        (0 until s.wordBits).map(b =>
+          when(col(s"v${w * s.wordBits + b}") > 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce((a, b) => a.bitwiseOR(b)).as(s"sim$w")
+      }: _*)
+  }
+
+  /** Band a signature frame and self-join each bucket: band b is `bw` bits
+    * of word b / perWord at offset (b % perWord)·bw; hamming is the XOR
+    * popcount summed over the words. `maxBucketDf` drops buckets hotter
+    * than the cap (saturation or a mega-cluster, O(df²) pairs each) — the
+    * `maxGramDf` rule of `substringSpans`; its window shares the self-join's
+    * band/key shuffle, so the guard adds no exchange.
+    */
+  private def simhashBandPairs(sig: DataFrame, s: SimhashLayout, bands: Int, bw: Int,
+                               maxBucketDf: Option[Int]): DataFrame = {
+    val perWord = s.wordBits / bw
+    val mask = if (bw == 64) -1L else (1L << bw) - 1 // (1L << 64) - 1 is 0 on the JVM
+    val words = (0 until s.words).map(w => col(s"sim$w"))
+    val banded0 = sig.select(col("id") +: words :+
       posexplode(array((0 until bands).map(b =>
-        shiftright(col("simhash"), b * bw).bitwiseAND(mask)): _*))
-        .as(Seq("band", "band_bits")))
+        shiftright(words(b / perWord), (b % perWord) * bw).bitwiseAND(mask)): _*))
+        .as(Seq("band", "band_bits")): _*)
     val banded = maxBucketDf match {
       case Some(cap) =>
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_bits")
+        val w = Window.partitionBy("band", "band_bits")
         banded0.withColumn("bucket_df", count(lit(1)).over(w))
           .filter(col("bucket_df") <= cap).drop("bucket_df")
       case None => banded0
     }
-    val a = banded.select(col("band"), col("band_bits"), col("id").as("id_a"), col("simhash").as("sim_a"))
-    val b2 = banded.select(col("band"), col("band_bits"), col("id").as("id_b"), col("simhash").as("sim_b"))
-    a.join(b2, Seq("band", "band_bits"))
+    def side(x: String) = banded.select(col("band") +: col("band_bits") +: col("id").as(s"id_$x") +:
+      (0 until s.words).map(w => col(s"sim$w").as(s"s$x$w")): _*)
+    side("a").join(side("b"), Seq("band", "band_bits"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        // hamming distance between the two simhashes
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).cast("long").as("hamming"))
+        (0 until s.words).map(w => bit_count(col(s"sa$w").bitwiseXOR(col(s"sb$w"))))
+          .reduce(_ + _).cast("long").as("hamming"))
       .distinct()
   }
 
-  /** SimHash near-dup candidates: docs agreeing on any band of the 64-bit
-    * simhash. The band plan is cardinality-adaptive (`simhashBandPlan`
-    * over 64 bits, width 16–32): small corpora get the legacy 4×16-bit
-    * quarters, large corpora get fewer, wider bands so background
-    * collisions stay ~linear in n. Width 32 (2×32 — every signature bit
-    * banded) covers n ≈ 2^32/16 ≈ 268M docs before the plan saturates;
-    * past that the 64-bit signature itself is the bound (the portable
-    * 60-bit variant tops out at 2×30 ≈ 67M for the same reason). The
-    * earlier ceilings — 21 (saturated at ~131k docs) and 30 (67M) — let
-    * per-bucket load, and with it the `maxBucketDf` recall loss, grow
-    * linearly on any real corpus.
-    *
-    * RECALL CONTRACT (read before relying on this across corpus sizes):
-    * by pigeonhole, a pair is GUARANTEED to surface only when its hamming
-    * distance ≤ bands−1 — hamming ≤ 3 under the small-corpus 4-band
-    * plan, ≤ 2 once the plan drops to 3 bands (n > ~2^16/16), and ≤ 1
-    * once it reaches 2 wide bands (n > ~2^21/16 ≈ 131k docs) — the Manku et al.
-    * (WWW'07) block-permutation trade: table count × block width is
-    * fixed by the signature, so halving the tables doubles the reach of
-    * each but narrows the guarantee. Pairs beyond the bound surface only
-    * probabilistically, so the SAME pair can legitimately disappear as
-    * the corpus grows and callers filtering at e.g. `hamming <= 6` are
-    * sampling, not enumerating, at every corpus size. Pass `bandPlan` to
-    * pin a fixed layout (fixed recall, quadratic background risk), or
-    * `maxBucketDf` to additionally cap per-bucket membership. The chosen
-    * plan is logged per run (slf4j INFO) so runs are auditable.
-    */
+  /** Near-dup candidates (id_a, id_b, hamming) of a layout. */
+  private def simhashPairs(s: SimhashLayout, df: DataFrame, idCol: String, textCol: String,
+                           bandPlan: Option[(Int, Int)], maxBucketDf: Option[Int]): DataFrame = {
+    for ((bands, bw) <- bandPlan)
+      require(bands * bw <= s.totalBits && (s.words == 1 || s.wordBits % bw == 0),
+        s"band plan ${bands}x$bw does not tile the ${s.words}x${s.wordBits}-bit signature")
+    // persisted: both self-join sides read it, else each re-runs the vote
+    // aggregation; the plan's count (one row per doc, as the SQL replica
+    // counts `sim`) materializes it, and finishPairs releases it
+    val sig = simhashSignature(df, idCol, textCol, s)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (bands, bw) = bandPlan.getOrElse(planBands(sig.count(), s.totalBits, s.ladder, 16L))
+    org.slf4j.LoggerFactory.getLogger(getClass).info(s"simhash ${s.words}x${s.wordBits}-bit: " +
+      s"band plan ${bands}x$bw-bit (guaranteed recall hamming <= ${bands - 1})")
+    finishPairs(simhashBandPairs(sig, s, bands, bw, maxBucketDf), sig)
+  }
+
+  /** Simhash candidates on one xxhash64 word (see [[SimhashLayout]]). */
   def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         bandPlan: Option[(Int, Int)] = None,
-                        maxBucketDf: Option[Int] = None): DataFrame = {
-    // persist: both sides of the band self-join read the signature frame,
-    // and without materialization each side re-runs the whole tokenize →
-    // 64-vote aggregation (the dominant stage) — same reasoning as the
-    // `withSig` persist in minhashPairs; released via finishPairs below
-    val withSim = simhashDf(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // adaptive plan sizes off the SIGNATURE frame (one row per doc) so
-    // the count materializes the persist instead of re-reading the source
-    val (bands, bw) = bandPlan.getOrElse(
-      simhashBandPlan(withSim.count(), totalBits = 64, minWidth = 16, maxWidth = 32))
-    logBandPlan("simhashCandidates", bands, bw)
-    finishPairs(bandPairs(withSim, bands, bw, maxBucketDf), withSim)
-  }
+                        maxBucketDf: Option[Int] = None): DataFrame =
+    simhashPairs(SimhashLayout(1, 64), df, idCol, textCol, bandPlan, maxBucketDf)
 
-  /** Audit line for the (possibly corpus-size-derived) band layout —
-    * guaranteed-recall bound is hamming ≤ bands−1 (see entry-point docs).
-    */
-  private def logBandPlan(site: String, bands: Int, bw: Int): Unit =
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"$site: band plan ${bands}x${bw}-bit (guaranteed recall hamming <= ${bands - 1})")
-
-  /** Portable SimHash candidates: same explode → per-bit vote → band
-    * pipeline as `simhashCandidates`, but token hashes are 60-bit md5
-    * prefixes so the run is reproducible in DuckDB (`simhashPortableOracleSql`
-    * generates the replica from the same bit layout and the SAME
-    * cardinality-adaptive sizing rule — `simhashBandPlan` over 60 bits,
-    * width 15–30: 4×15 for small corpora, then 3 and finally 2 wider
-    * bands as n grows, covering n ≈ 2^30/16 ≈ 67M docs unsaturated).
-    *
-    * Same RECALL CONTRACT as `simhashCandidates`: guaranteed only for
-    * hamming ≤ bands−1 (3 under 4×15, 2 at 3 bands, 1 once the plan
-    * reaches 2 wide bands at n > ~2^20/16 docs), probabilistic beyond —
-    * candidate output is corpus-size-dependent unless `bandPlan` pins a
-    * layout. Chosen plan is logged per run.
-    */
+  /** Simhash candidates on one md5 word ([[simhashPortableOracleSql]]). */
   def simhashCandidatesPortable(df: DataFrame, idCol: String, textCol: String,
                                 bandPlan: Option[(Int, Int)] = None,
-                                maxBucketDf: Option[Int] = None): DataFrame = {
-    val bits = 60
-    val tok = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .withColumn("h", conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"))
-    val votes = (0 until bits).map { bit =>
-      sum(when(shiftright(col("h"), bit).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v$bit")
-    }
-    val withSim = tok.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until bits).map(bit =>
-          when(col(s"v$bit") > 0, lit(1L << bit)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("simhash"))
-      // persisted for the same both-sides-of-the-self-join reason as the
-      // fast path above; released via finishPairs below
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // sizing off the signature frame: one row per doc, count reads the
-    // cache it just materialized (mirrors the SQL replica's count of `sim`)
-    val (bands, bw) = bandPlan.getOrElse(
-      simhashBandPlan(withSim.count(), totalBits = bits, minWidth = 15, maxWidth = 30))
-    logBandPlan("simhashCandidatesPortable", bands, bw)
-    finishPairs(bandPairs(withSim, bands, bw, maxBucketDf), withSim)
-  }
+                                maxBucketDf: Option[Int] = None): DataFrame =
+    simhashPairs(SimhashLayout(1, 60), df, idCol, textCol, bandPlan, maxBucketDf)
 
-  /** DuckDB replica of `simhashCandidatesPortable` (+ hamming cutoff) over
-    * a `corpus(doc_id, text)` CTE body — generated from the same 60-bit
-    * layout and replaying the same integer-exact adaptive sizing rule
-    * (`simhashBandPlan`: smallest bw in [15,30] with 2^bw >= 16·n, bands
-    * = 60/bw) inside SQL, so the oracle picks the identical plan at every
-    * scale factor without knowing n in advance.
-    */
-  def simhashPortableOracleSql(corpusSql: String, maxHamming: Int,
-                               maxBucketDf: Option[Int] = None): String = {
-    val bits = 60
-    val voteExprs = (0 until bits).map(b =>
-      s"SUM(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS v$b").mkString(",\n  ")
-    val simExpr = (0 until bits).map(b =>
-      s"(CASE WHEN v$b > 0 THEN (1::BIGINT << $b) ELSE 0::BIGINT END)").mkString(" | ")
-    val dfGuard = maxBucketDf
-      .map(cap => s"\n  QUALIFY count(*) OVER (PARTITION BY band, key) <= $cap")
-      .getOrElse("")
-    s"""WITH corpus AS ($corpusSql),
-       |tok AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM corpus),
-       |h AS (SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h FROM tok),
-       |votes AS (SELECT doc_id,
-       |  $voteExprs
-       |  FROM h GROUP BY doc_id),
-       |sim AS (SELECT doc_id, $simExpr AS s FROM votes),
-       |params AS (SELECT CAST(COALESCE(
-       |    MIN(CASE WHEN (1::BIGINT << bw) >= 16 * n THEN bw END), 30) AS INT) AS bw
-       |  FROM (SELECT unnest(range(15, 31)) AS bw), (SELECT count(*) AS n FROM sim)),
-       |bands AS (
-       |  SELECT doc_id, s, bd.band AS band,
-       |    (s >> (bd.band * p.bw)) & ((1::BIGINT << p.bw) - 1) AS key
-       |  FROM sim, params p, (SELECT CAST(unnest(range(0, 4)) AS INT) AS band) bd
-       |  WHERE bd.band < ($bits // p.bw)$dfGuard),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    bit_count(xor(a.s, b.s))::BIGINT AS hamming
-       |  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-       |  WHERE a.doc_id < b.doc_id)
-       |SELECT id_a, id_b, hamming FROM cand
-       |WHERE hamming <= $maxHamming ORDER BY id_a, id_b""".stripMargin
-  }
-
-  // ----- 128-bit simhash tier: the signature-bound lift ------------------
-  //
-  // The 64-bit plans above saturate when the band key space runs out of
-  // signature: 2 bands × 32 bits tops out at 2^32/16 ≈ 268M docs (fast
-  // path; the 60-bit portable at 67M). This tier doubles the signature to
-  // TWO words, and restricts band widths to divisors of the word so no
-  // band ever straddles a word boundary — banding stays shift+mask on one
-  // Long, and at the widest plan each WORD is a band (2×64: saturation
-  // ~2^64/16 ≈ 10^18 docs). Wider signature also means more bands at the
-  // same width (8×16 vs 4×16), so small-corpus guaranteed recall IMPROVES
-  // (hamming ≤ bands−1 = 7 vs 3) while the scale ceiling moves out by ten
-  // decades. Same Manku et al. trade at the wide end.
-
-  /** Adaptive plan for a two-word signature: smallest width in the word's
-    * divisor ladder with `2^bw >= loadFactor·n`, else the word itself.
-    * wordBits = 64 (fast, xxhash64 words) or 60 (portable, md5 words —
-    * the ladder the generated DuckDB oracle replays verbatim).
-    */
-  def simhash128BandPlan(nDocs: Long, wordBits: Int = 64,
-                         loadFactor: Long = 16L): (Int, Int) = {
-    val widths = wordBits match {
-      case 64 => Seq(16, 32, 64)
-      case 60 => Seq(15, 30, 60)
-      case w  => throw new IllegalArgumentException(s"unsupported word width $w")
-    }
-    val bw = widths.find(w => w <= 62 && (1L << w) >= loadFactor * nDocs)
-      .getOrElse(widths.last)
-    (2 * wordBits / bw, bw)
-  }
-
-  /** 128-bit SimHash signature: two independent 64-bit word hashes per
-    * token (xxhash64 with and without a salt column), 128 per-bit votes
-    * in ONE hash aggregate — the same explode → narrow-sums → reassemble
-    * shape as [[simhashDf]] (the per-row fold form breaks codegen).
-    */
-  def simhash128Df(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // NO spreadForCpu (r18 verdict regression d34 0.62×): two xxhash64
-    // per token is still the cheap-hash case — see simhashDf above.
-    val tokenHashes = df
-      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .withColumn("h0", xxhash64(col("tok")))
-      // salt FIRST (r18 ADVICE): the salt-last form xxhash64(tok, 1L)
-      // folds sequentially = hash(1L, seed=h0), a pure function of h0 —
-      // the second 64 vote words would carry zero extra token entropy.
-      // xxhash64(1L, tok) re-hashes the token bytes under an independent
-      // seed, so sim1 really is a second independent signature word.
-      .withColumn("h1", xxhash64(lit(1L), col("tok")))
-    val votes = (0 until 128).map { bit =>
-      val w = if (bit < 64) col("h0") else col("h1")
-      sum(when(shiftright(w, bit % 64).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v$bit")
-    }
-    tokenHashes.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until 64).map(b =>
-          when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("sim0"),
-        (64 until 128).map(b =>
-          when(col(s"v$b") > 0, lit(1L << (b - 64))).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("sim1"))
-  }
-
-  /** Band a two-word signature frame; same bucket-df guard and one
-    * band-key shuffle as [[bandPairs]]. Hamming = popcount over both
-    * words.
-    */
-  private def bandPairs128(withSim: DataFrame, bands: Int, bw: Int, wordBits: Int,
-                           maxBucketDf: Option[Int]): DataFrame = {
-    require(wordBits % bw == 0, s"band width $bw must divide the word ($wordBits)")
-    val perWord = wordBits / bw
-    val mask = if (bw == 64) lit(-1L) else lit((1L << bw) - 1)
-    val bandCols = (0 until bands).map { b =>
-      val w = if (b < perWord) col("sim0") else col("sim1")
-      shiftright(w, (b % perWord) * bw).bitwiseAND(mask)
-    }
-    val banded0 = withSim.select(col("id"), col("sim0"), col("sim1"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "band_bits")))
-    val banded = maxBucketDf match {
-      case Some(cap) =>
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_bits")
-        banded0.withColumn("bucket_df", count(lit(1)).over(w))
-          .filter(col("bucket_df") <= cap).drop("bucket_df")
-      case None => banded0
-    }
-    val a = banded.select(col("band"), col("band_bits"), col("id").as("id_a"),
-      col("sim0").as("sa0"), col("sim1").as("sa1"))
-    val b2 = banded.select(col("band"), col("band_bits"), col("id").as("id_b"),
-      col("sim0").as("sb0"), col("sim1").as("sb1"))
-    a.join(b2, Seq("band", "band_bits"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (bit_count(col("sa0").bitwiseXOR(col("sb0"))) +
-          bit_count(col("sa1").bitwiseXOR(col("sb1")))).cast("long").as("hamming"))
-      .distinct()
-  }
-
-  /** 128-bit fast-path candidates (xxhash64 words). Guaranteed recall
-    * hamming ≤ bands−1 (7 at 8×16, 3 at 4×32, 1 at 2×64); saturation
-    * ~10^18 docs at the widest plan. Same persist/finishPairs lifecycle
-    * as [[simhashCandidates]].
-    */
+  /** Simhash candidates on two xxhash64 words. */
   def simhash128Candidates(df: DataFrame, idCol: String, textCol: String,
                            bandPlan: Option[(Int, Int)] = None,
-                           maxBucketDf: Option[Int] = None): DataFrame = {
-    val withSim = simhash128Df(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (bands, bw) = bandPlan.getOrElse(simhash128BandPlan(withSim.count(), wordBits = 64))
-    logBandPlan("simhash128Candidates", bands, bw)
-    finishPairs(bandPairs128(withSim, bands, bw, 64, maxBucketDf), withSim)
-  }
+                           maxBucketDf: Option[Int] = None): DataFrame =
+    simhashPairs(SimhashLayout(2, 64), df, idCol, textCol, bandPlan, maxBucketDf)
 
-  /** Portable 120-bit variant: two 60-bit md5-prefix words per token
-    * (hex chars 1–15 and 17–31 — disjoint halves of the same digest), so
-    * the whole pipeline — votes, signature, the {15,30,60} divisor
-    * ladder, banding, hamming — replays in DuckDB
-    * ([[simhash128PortableOracleSql]]). Saturation at the 2×60 plan:
-    * 2^60/16 ≈ 7·10^16 docs.
-    */
+  /** Simhash candidates on two md5 words ([[simhash128PortableOracleSql]]). */
   def simhash128CandidatesPortable(df: DataFrame, idCol: String, textCol: String,
                                    bandPlan: Option[(Int, Int)] = None,
-                                   maxBucketDf: Option[Int] = None): DataFrame = {
-    val wb = 60
-    val tok = graft.core.Par.spreadForCpu(df)
-      .select(col(idCol).as("id"), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .withColumn("m", md5(col("tok")))
-      .withColumn("h0", conv(substring(col("m"), 1, 15), 16, 10).cast("long"))
-      .withColumn("h1", conv(substring(col("m"), 17, 15), 16, 10).cast("long"))
-    val votes = (0 until 2 * wb).map { bit =>
-      val w = if (bit < wb) col("h0") else col("h1")
-      sum(when(shiftright(w, bit % wb).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v$bit")
-    }
-    val withSim = tok.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until wb).map(b =>
-          when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("sim0"),
-        (wb until 2 * wb).map(b =>
-          when(col(s"v$b") > 0, lit(1L << (b - wb))).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("sim1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (bands, bw) = bandPlan.getOrElse(simhash128BandPlan(withSim.count(), wordBits = wb))
-    logBandPlan("simhash128CandidatesPortable", bands, bw)
-    finishPairs(bandPairs128(withSim, bands, bw, wb, maxBucketDf), withSim)
-  }
+                                   maxBucketDf: Option[Int] = None): DataFrame =
+    simhashPairs(SimhashLayout(2, 60), df, idCol, textCol, bandPlan, maxBucketDf)
 
-  /** DuckDB replica of [[simhash128CandidatesPortable]] (+ hamming
-    * cutoff): two 60-bit md5 words, 120 votes, the same integer-exact
-    * {15,30,60} divisor ladder sized from the corpus inside SQL, banding
-    * by word + offset, two-word popcount hamming.
+  /** DuckDB replica of a portable layout's candidates (+ hamming cutoff)
+    * over a `corpus(doc_id, text)` CTE body, from the same word slices,
+    * votes and ladder; it replays the sizing rule in SQL, so it picks the
+    * identical plan at every scale factor without knowing n.
     */
-  def simhash128PortableOracleSql(corpusSql: String, maxHamming: Int,
-                                  maxBucketDf: Option[Int] = None): String = {
-    val wb = 60
-    val voteExprs = (0 until 2 * wb).map { bit =>
-      val w = if (bit < wb) "h0" else "h1"
-      s"SUM(CASE WHEN ($w >> ${bit % wb}) & 1 = 1 THEN 1 ELSE -1 END) AS v$bit"
-    }.mkString(",\n  ")
-    val sim0 = (0 until wb).map(b =>
-      s"(CASE WHEN v$b > 0 THEN (1::BIGINT << $b) ELSE 0::BIGINT END)").mkString(" | ")
-    val sim1 = (wb until 2 * wb).map(b =>
-      s"(CASE WHEN v$b > 0 THEN (1::BIGINT << ${b - wb}) ELSE 0::BIGINT END)").mkString(" | ")
+  private def simhashOracleSql(s: SimhashLayout, corpusSql: String, maxHamming: Int,
+                               maxBucketDf: Option[Int]): String = {
+    require(s.portable, "only md5 signature words replay in DuckDB")
+    val wb = s.wordBits
+    val words = 0 until s.words
+    val sCols = words.map(w => s"s$w").mkString(", ")
+    val hashes = words.map(w =>
+      s"CAST(('0x' || substr(md5(tok), ${s.md5Start(w)}, 15)) AS BIGINT) AS h$w").mkString(",\n  ")
+    val voteExprs = (0 until s.totalBits).map(bit =>
+      s"SUM(CASE WHEN (h${bit / wb} >> ${bit % wb}) & 1 = 1 THEN 1 ELSE -1 END) AS v$bit")
+      .mkString(",\n  ")
+    val sims = words.map(w => (0 until wb).map(b =>
+      s"(CASE WHEN v${w * wb + b} > 0 THEN (1::BIGINT << $b) ELSE 0::BIGINT END)")
+      .mkString(" | ") + s" AS s$w").mkString(",\n  ")
+    val hamming = words.map(w => s"bit_count(xor(a.s$w, b.s$w))").mkString(" + ")
     val dfGuard = maxBucketDf
       .map(cap => s"\n  QUALIFY count(*) OVER (PARTITION BY band, key) <= $cap")
       .getOrElse("")
     s"""WITH corpus AS ($corpusSql),
        |tok AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM corpus),
        |h AS (SELECT doc_id,
-       |  CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h0,
-       |  CAST(('0x' || substr(md5(tok), 17, 15)) AS BIGINT) AS h1 FROM tok),
+       |  $hashes FROM tok),
        |votes AS (SELECT doc_id,
        |  $voteExprs
        |  FROM h GROUP BY doc_id),
-       |sim AS (SELECT doc_id, $sim0 AS s0, $sim1 AS s1 FROM votes),
+       |sim AS (SELECT doc_id,
+       |  $sims FROM votes),
        |params AS (SELECT CAST(COALESCE(
-       |    MIN(CASE WHEN (1::BIGINT << bw) >= 16 * n THEN bw END), 60) AS INT) AS bw
-       |  FROM (SELECT unnest([15, 30, 60]) AS bw), (SELECT count(*) AS n FROM sim)),
+       |    MIN(CASE WHEN (1::BIGINT << bw) >= 16 * n THEN bw END), ${s.ladder.last}) AS INT) AS bw
+       |  FROM (SELECT unnest([${s.ladder.mkString(", ")}]) AS bw), (SELECT count(*) AS n FROM sim)),
        |bands AS (
-       |  SELECT doc_id, s0, s1, bd.band AS band,
-       |    ((CASE WHEN bd.band < ($wb // p.bw) THEN s0 ELSE s1 END)
-       |      >> ((bd.band % ($wb // p.bw)) * p.bw)) & ((1::BIGINT << p.bw) - 1) AS key
-       |  FROM sim, params p, (SELECT CAST(unnest(range(0, 8)) AS INT) AS band) bd
-       |  WHERE bd.band < (${2 * wb} // p.bw)$dfGuard),
+       |  SELECT doc_id, $sCols, bd.band AS band,
+       |    (([$sCols])[bd.band // ($wb // p.bw) + 1] >> ((bd.band % ($wb // p.bw)) * p.bw))
+       |      & ((1::BIGINT << p.bw) - 1) AS key
+       |  FROM sim, params p, (SELECT CAST(unnest(range(0, ${s.totalBits / s.ladder.head})) AS INT) AS band) bd
+       |  WHERE bd.band < (${s.totalBits} // p.bw)$dfGuard),
        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |    (bit_count(xor(a.s0, b.s0)) + bit_count(xor(a.s1, b.s1)))::BIGINT AS hamming
+       |    ($hamming)::BIGINT AS hamming
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
        |  WHERE a.doc_id < b.doc_id)
        |SELECT id_a, id_b, hamming FROM cand
        |WHERE hamming <= $maxHamming ORDER BY id_a, id_b""".stripMargin
   }
+
+  /** DuckDB replica of [[simhashCandidatesPortable]]. */
+  def simhashPortableOracleSql(corpusSql: String, maxHamming: Int,
+                               maxBucketDf: Option[Int] = None): String =
+    simhashOracleSql(SimhashLayout(1, 60), corpusSql, maxHamming, maxBucketDf)
+
+  /** DuckDB replica of [[simhash128CandidatesPortable]]. */
+  def simhash128PortableOracleSql(corpusSql: String, maxHamming: Int,
+                                  maxBucketDf: Option[Int] = None): String =
+    simhashOracleSql(SimhashLayout(2, 60), corpusSql, maxHamming, maxBucketDf)
 
   /** Embedding-cosine near-duplicate pairs: all (a, b) with cosine ≥
     * threshold. Exact all-pairs form (the oracle-checkable baseline);

@@ -19,23 +19,16 @@ object Explain {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // bench-only drills (not in SparkEntry.queries): explain the simhash
+    // kernel's SIGNATURE frame (W xxhash64 words) — the persist/self-join
+    // machinery behind it is checkpoint-fenced and explains as Scan ExistingRDD
+    val simhashWords = Map("d06_simhash" -> 1, "d34_simhash128" -> 2)
     names.foreach { n =>
       println(s"===== $n =====")
-      // bench-only drills (not in SparkEntry.queries): explain the
-      // SIGNATURE kernel frame — the persist/self-join machinery behind
-      // it is checkpoint-fenced and explains as Scan ExistingRDD
-      n match {
-        case "d06_simhash" =>
-          graft.ext.Dedup.simhashDf(
-            graft.queries.TextQueries.corpusWithNearDups(spark, sfDir), "doc_id", "text")
-            .explain("formatted")
-        case "d34_simhash128" =>
-          graft.ext.Dedup.simhash128Df(
-            graft.queries.TextQueries.corpusWithNearDups(spark, sfDir), "doc_id", "text")
-            .explain("formatted")
-        case _ =>
-          graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      }
+      simhashWords.get(n).fold(graft.SparkEntry.queries(n)(spark, sfDir)) { w =>
+        graft.ext.Dedup.simhashSignature(graft.queries.TextQueries.corpusWithNearDups(spark, sfDir),
+          "doc_id", "text", graft.ext.Dedup.SimhashLayout(w, 64))
+      }.explain("formatted")
     }
     spark.stop()
   }

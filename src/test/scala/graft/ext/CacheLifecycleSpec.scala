@@ -54,6 +54,14 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(n > 0 && datasetCacheEmpty, "simhashCandidates left a Dataset cache registered")
     n = Dedup.simhashCandidatesPortable(corpus, "doc_id", "text").filter(col("hamming") <= 6).count()
     assert(n > 0 && datasetCacheEmpty, "simhashCandidatesPortable left a Dataset cache registered")
+    n = Dedup.simhash128Candidates(corpus, "doc_id", "text").filter(col("hamming") <= 12).count()
+    assert(n > 0 && datasetCacheEmpty, "simhash128Candidates left a Dataset cache registered")
+    n = Dedup.simhash128CandidatesPortable(corpus, "doc_id", "text").filter(col("hamming") <= 12).count()
+    assert(n > 0 && datasetCacheEmpty, "simhash128CandidatesPortable left a Dataset cache registered")
+    n = Dedup.minhashClusterEdges(corpus, "doc_id", "text").count()
+    assert(n > 0 && datasetCacheEmpty, "minhashClusterEdges left a Dataset cache registered")
+    n = Dedup.minhashClusterEdges(corpus, "doc_id", "text", verifyThreshold = Some(0.5)).count()
+    assert(n > 0 && datasetCacheEmpty, "minhashClusterEdges (verified) left a Dataset cache registered")
 
     // all results dropped above: the checkpointed pair frames must drain
     awaitNoPersistentRdds()

@@ -133,4 +133,17 @@ class SimhashBandPlanSpec extends AnyFunSuite {
     assert(adaptive === pinned)
     assert(adaptive.nonEmpty)
   }
+
+  test("a pinned plan that does not tile the signature is rejected before any job") {
+    import spark.implicits._
+    val df = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val jobs = org.apache.spark.graft.Jobs.count(spark) {
+      // 5x16 bands 80 of 64 bits; 4x24 straddles the 64-bit word boundary
+      intercept[IllegalArgumentException](
+        Dedup.simhashCandidates(df, "doc_id", "text", bandPlan = Some((5, 16))))
+      intercept[IllegalArgumentException](
+        Dedup.simhash128Candidates(df, "doc_id", "text", bandPlan = Some((4, 24))))
+    }
+    assert(jobs === 0)
+  }
 }
